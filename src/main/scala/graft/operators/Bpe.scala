@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.core.Rounds
 
 /** Byte-pair-encoding tokenizer TRAINING and ENCODING as corpus
   * operators — the step after [[CorpusStats.vocabulary]] in the
@@ -46,13 +47,11 @@ object Bpe {
     * as its OWN symbol; merges may absorb it ("t </w>" → "t</w>"). */
   val EndOfWord = "</w>"
 
-  /** [[learnMerges]]' small-vocabulary gate: max word-TYPE rows replayed
-    * on the driver (the [[Dedup.connectedComponents]] small-graph
-    * discipline — a driver-memory bound, not a data-scale bound; ~25 MB
-    * collected at the default). Env `SPARK_GRAFT_BPE_DRIVER_MAX`
-    * overrides; 0 forces the distributed rounds. */
-  private[graft] val DefaultMaxDriverTypes: Long =
-    graft.core.Env.long("SPARK_GRAFT_BPE_DRIVER_MAX", 1L << 19)
+  /** [[learnMerges]]' small-vocabulary budget: max word-TYPE rows
+    * replayed on the driver (~25 MB collected; the
+    * [[graft.core.Rounds.onDriver]] gate). 0 forces the distributed
+    * rounds. */
+  private[graft] final val DefaultMaxDriverTypes = 1L << 19
 
   /** Hard cap on merge-table size — bounds [[learnMerges]]' driver
     * rounds and [[encode]]'s collected table (the native ApplyMerges
@@ -105,15 +104,7 @@ object Bpe {
     require(minPairCount >= 1L,
       s"minPairCount must be >= 1, got $minPairCount")
     val spark = docs.sparkSession
-    val sc = spark.sparkContext
-    // set-diff of context-global persistent RDD ids — assumes no
-    // OTHER thread caches on this session mid-round (the same
-    // single-driver contract as connectedComponents' loop)
-    def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val mat = df.localCheckpoint(true)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
+    val rounds = new Rounds(spark.sparkContext)
 
     // the word-type aggregate goes through the row-local TokenCounts
     // kernel for the same reason CorpusStats.vocabulary does: a raw
@@ -127,13 +118,13 @@ object Bpe {
 
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
-    var (cur, prevIds) = checkpoint(base)
+    var cur = rounds(base)
     // SMALL-VOCAB ROUTE (r12): the merge loop iterates over the WORD-TYPE
     // table, whose size follows Heaps' law — a fraction of the corpus at
     // any scale — and each distributed round costs an argmax job plus a
     // checkpoint job. When the materialized type table is at most
-    // `DefaultMaxDriverTypes` rows (env SPARK_GRAFT_BPE_DRIVER_MAX; the
-    // count reads the just-checkpointed blocks), collect it and replay
+    // `maxDriverTypes` rows (the count reads the just-checkpointed
+    // blocks), collect it and replay
     // the identical rounds in memory: same pair counting (each adjacent
     // occurrence, freq-weighted), same argmax tie-break (count desc,
     // then lhs/rhs in UTF-8 BYTE order — java.lang.String order would
@@ -142,11 +133,10 @@ object Bpe {
     // tokenizer trainers are single-node for exactly this reason; a
     // web-garbage vocabulary past the gate takes the distributed rounds
     // unchanged. Equivalence spec-pinned in BpeSpec.
-    if (maxDriverTypes > 0 && cur.count() <= maxDriverTypes) {
+    if (Rounds.onDriver(maxDriverTypes, cur.count())) {
       var words = cur.select(col("wstr"), col("freq")).collect()
         .map(r => (r.getString(0), r.getLong(1)))
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      Rounds.release(cur)
       def ltUtf8(a: String, b: String): Boolean = {
         val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -207,18 +197,15 @@ object Bpe {
         val (l, r, c) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((k, l, r, c))
-        val (next, ids) = checkpoint(cur.select(
+        val next = rounds(cur.select(
           replace(col("wstr"), lit(s" $l $r "), lit(s" $l$r "))
             .as("wstr"), col("freq")))
-        prevIds.foreach(i =>
-          sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+        Rounds.release(cur)
         cur = next
-        prevIds = ids
         k += 1
       }
     }
-    prevIds.foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+    Rounds.release(cur)
 
     import spark.implicits._
     merges.toSeq.toDF("rank", "lhs", "rhs", "pair_cnt")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.core.Rounds
 
 /** Deduplication operators for the training-data pipeline tier.
   *
@@ -15,13 +16,11 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** [[connectedComponents]]' small-graph gate: max symmetric edge rows
-    * folded on the driver (≈ 8 MB collected at the default — a broadcast
-    * build side's size class). Env `SPARK_GRAFT_CC_DRIVER_MAX` overrides
-    * (0 forces the distributed fold; larger values trade driver memory
-    * for fewer distributed rounds). */
-  private[graft] val DefaultMaxDriverEdges: Long =
-    graft.core.Env.long("SPARK_GRAFT_CC_DRIVER_MAX", 1L << 20)
+  /** [[connectedComponents]]' small-graph budget: max symmetric edge
+    * rows folded on the driver (≈ 8 MB collected — a broadcast build
+    * side's size class; the [[graft.core.Rounds.onDriver]] gate). 0
+    * forces the distributed fold. */
+  private[graft] final val DefaultMaxDriverEdges = 1L << 20
 
   /** Exact dedup: keep the first row (min id) per identical value.
     * Grouping key is a 128-bit hash pair — two independently seeded
@@ -906,9 +905,9 @@ object Dedup {
     * columns — a silent cast of string/UUID ids to long would collapse
     * every edge to (null, null), so non-integral ids are rejected.
     *
-    * `maxDriverEdges` (env override `SPARK_GRAFT_CC_DRIVER_MAX`, 0 to
-    * force the distributed fold) is deliberately a driver-MEMORY bound,
-    * not a data-scale bound — it needs no retuning per corpus size.
+    * `maxDriverEdges` (0 forces the distributed fold) is deliberately a
+    * driver-MEMORY bound, not a data-scale bound — it needs no retuning
+    * per corpus size.
     *
     * SMALL-GRAPH ROUTE (r12): once the symmetric-deduped edge list is
     * materialized, its row count is a free control read off the cached
@@ -939,65 +938,36 @@ object Dedup {
         s"connectedComponents id column '$c' must be integral, got $dt")
     }
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
-    // per-round lineage cut + track the pinned RDD ids so superseded
-    // rounds can be unpersisted deterministically instead of waiting on
-    // the ContextCleaner's GC-driven cleanup. checkpointDir switches
+    // per-round lineage cut; superseded rounds are unpersisted as soon
+    // as the next one materializes instead of waiting on the
+    // ContextCleaner's GC-driven cleanup. checkpointDir switches
     // localCheckpoint → reliable checkpoint files (executor-loss
-    // resilience for long folds) — see [[Graph.RoundCheckpoint]].
-    val checkpoint = new Graph.RoundCheckpoint(sc, checkpointDir)
-    val edges = checkpoint.pin(pairs
+    // resilience for long folds) — see [[graft.core.Rounds]].
+    val rounds = new Rounds(spark.sparkContext, checkpointDir)
+    val edges = rounds.pin(pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs
         .select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .distinct())
     // the count reads the just-pinned blocks, not the pair-generation
     // plan — a bounded control read in the repo's established sense
-    // strict guard on the gate itself: 0 must force the distributed
-    // fold as documented, including for an EMPTY edge list (count 0)
-    if (maxDriverEdges > 0 && edges.count() <= maxDriverEdges) {
+    if (Rounds.onDriver(maxDriverEdges, edges.count())) {
       // one direction suffices for connectivity — halve the collect.
       // <= keeps SELF-edges: the incremental fold's star contraction
       // encodes untouched singletons as (id, id), and dropping them
-      // would erase those ids from the labeling
-      val half = edges.filter(col("src") <= col("dst"))
+      // would erase those ids from the labeling. Rows with a null
+      // endpoint are collected too: the distributed fold labels a null
+      // id (joins never match it) and union-find has no null node, so
+      // such a graph routes distributed.
+      val half = edges.filter(col("src") <= col("dst") ||
+          col("src").isNull || col("dst").isNull)
         .select("src", "dst").collect()
-      val parent = new scala.collection.mutable.LongMap[Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
+      if (!half.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+        rounds.releasePinned()
+        return unionFind(spark, half)
       }
-      // union-by-min-root: the component's min id can never acquire a
-      // parent (only a smaller root could become one), so every final
-      // root IS the component minimum — the distributed fold's fixpoint
-      val nodes = new scala.collection.mutable.LongMap[Unit]()
-      half.foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        nodes.update(a, ()); nodes.update(b, ())
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      checkpoint.releasePinned()
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-        System.err.println(
-          s"[cc] driver union-find: ${half.length} pairs, ${nodes.size} nodes")
-      val rows = nodes.keys.toSeq.map(id => (id, find(id)))
-      // LocalRelation below ~200k rows (accurate stats → downstream
-      // joins auto-broadcast); parallelized above (a multi-MB
-      // LocalRelation would be copied into every consumer plan)
-      import spark.implicits._
-      return if (rows.size <= 200000) rows.toDF("id", "comp")
-      else sc.parallelize(rows, math.max(1, rows.size / 100000))
-        .toDF("id", "comp")
     }
-    var (labels, prevIds) = checkpoint(
+    var labels = rounds(
       edges.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
     var iter = 0
     var changed = 1L
@@ -1012,7 +982,7 @@ object Dedup {
       // self-join's round computes each partition once and caches it
       // (block-level locking serves the second side from cache), so no
       // separate materialization job is paid.
-      val (stepped, stepIds) = checkpoint.lazyMark(labels
+      val stepped = rounds.lazyMark(labels
         .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
         .select(col("id"), col("comp").as("__old"),
           least(col("comp"), coalesce(col("__nmin"), col("comp"))).as("__c1")))
@@ -1028,22 +998,52 @@ object Dedup {
       // (the Graph dangling-fold discipline): one job per round instead
       // of three — the count computes `next`, persists its blocks, and
       // truncates lineage in the same pass
-      val (mat, ids) = checkpoint.lazyMark(next)
+      val mat = rounds.lazyMark(next)
       changed = mat.filter(col("comp") < col("__old")).count()
+      Rounds.release(labels, stepped)
       labels = mat.select("id", "comp")
-      (prevIds ++ stepIds).foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      prevIds = ids
       iter += 1
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxIter rounds")
-    if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      System.err.println(s"[cc] converged in $iter rounds")
     // labels are checkpointed (lineage-free) — free the run-scoped edge
     // pin so looped callers don't accumulate cached edge lists
-    checkpoint.releasePinned()
+    rounds.releasePinned()
     labels
+  }
+
+  /** [[connectedComponents]]' driver route over one direction of the
+    * symmetric edge list. Union-by-min-root: the component's min id can
+    * never acquire a parent (only a smaller root could become one), so
+    * every final root IS the component minimum — the distributed fold's
+    * fixpoint. The labels come back in the replay result form of
+    * [[graft.core.Rounds.driverFrame]]. */
+  private def unionFind(spark: org.apache.spark.sql.SparkSession,
+                        half: Array[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val parent = new scala.collection.mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent(c); parent(c) = r; c = n
+      }
+      r
+    }
+    val nodes = new scala.collection.mutable.LongMap[Unit]()
+    half.foreach { row =>
+      val (a, b) = (row.getLong(0), row.getLong(1))
+      nodes.update(a, ()); nodes.update(b, ())
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    Rounds.driverFrame(spark, nodes.keys.toSeq.map(id => Row(id, find(id))),
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("comp", LongType, nullable = false))))
   }
 
   /** Incremental connected components: fold a NEW batch of pairs into an

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Rounds
 
 /** Link-graph analysis over an edge list: node degrees and a
   * deterministic fixed-point PageRank — the domain-authority signal a
@@ -38,8 +39,8 @@ import org.apache.spark.sql.functions._
   * `src` and checkpointed — each iteration then shuffles only the
   * N-row rank table into that fixed layout (one exchange) and rolls
   * contributions up by `dst` (second exchange); the billion-edge side
-  * never re-shuffles. Rank lineage is truncated per round via tracked
-  * localCheckpoints (the connectedComponents discipline — storage
+  * never re-shuffles. Rank lineage is truncated per round via owned
+  * localCheckpoints ([[graft.core.Rounds]] — storage
   * holds the edge list plus two rank tables, superseded blocks are
   * unpersisted eagerly). Per-round driver chatter is ONE job: the
   * 1-row dangling-mass control read (plus the L1 step in tol mode)
@@ -58,19 +59,56 @@ object Graph {
       ColumnBridge.expression(b.cast("long"))))
   }
 
-  /** [[pageRank]]/[[trustRank]]'s small-graph gate: max aggregated edge
-    * rows replayed on the driver (≈ 24 MB collected at the default — a
-    * broadcast build side's size class; the
-    * [[Dedup.connectedComponents]] discipline: a driver-MEMORY bound on
-    * an already-materialized count, not a data-scale tuning). Env
-    * `SPARK_GRAFT_RANK_DRIVER_MAX` overrides; 0 forces the distributed
-    * rounds. */
-  private[graft] val DefaultMaxDriverRankEdges: Long =
-    graft.core.Env.long("SPARK_GRAFT_RANK_DRIVER_MAX", 1L << 20)
+  /** [[pageRank]]/[[trustRank]]'s small-graph budget: max aggregated
+    * edge rows replayed on the driver (≈ 24 MB collected — a broadcast
+    * build side's size class; the [[graft.core.Rounds.onDriver]] gate).
+    * 0 forces the distributed rounds. */
+  private[graft] final val DefaultMaxDriverRankEdges = 1L << 20
+
+  /** The fixed-point guards both rank routes run, in one order, over
+    * the same control values (node count, seeds among the nodes — equal
+    * to `n` for pageRank — and the max out-weight); returns the
+    * teleport share (pageRank's initR, trustRank's seedShare). Cold
+    * start keeps mass ≤ scale (it only shrinks); a warm start may begin
+    * at ≤ 2·scale (prior mass ≤ scale plus ≤ scale of new-node or
+    * new-seed initial mass), so its bounds tighten ×2 — fail fast
+    * instead of silently wrapping (the zorderValue lesson). Largest
+    * products: rank_fp*w ≤ massBound*maxWtot and
+    * dampNum*(inSum+dshare) ≤ dampNum*2*massBound; trustRank's
+    * dangling·seedShare ≤ scale² stays a driver-side BigInt. */
+  private def rankShare(trust: Boolean, n: Long, nSeeds: Long, maxW: Long,
+                        warm: Boolean, dampNum: Long, scale: Long): Long = {
+    val label = if (trust) "trustRank" else "pageRank"
+    require(n > 0, s"$label: empty graph")
+    if (trust) require(nSeeds > 0,
+      "trustRank: no seed is a graph node — trust cannot enter")
+    val massBound = if (warm) 2 * scale else scale
+    require(maxW <= Long.MaxValue / massBound,
+      s"$label: mass bound $massBound * max out-weight=$maxW would " +
+        "overflow; lower scale or pre-normalize weights")
+    require(dampNum <= Long.MaxValue / (2 * massBound),
+      s"$label: dampNum=$dampNum * 2*mass bound=$massBound overflows")
+    // n > scale ⇒ initR = 0 and every rank silently collapses to zero;
+    // fail fast like the other fixed-point guards (raise scale instead)
+    if (trust) require(nSeeds <= scale,
+      s"trustRank: seed count $nSeeds exceeds fixed-point scale $scale")
+    else require(n <= scale,
+      s"pageRank: node count $n exceeds fixed-point scale $scale; " +
+        "raise scale so initR = scale/n stays nonzero")
+    scale / nSeeds
+  }
+
+  private def priorOutOfRange(label: String, scale: Long): String =
+    s"$label: prior rank outside [0, $scale] — priors must come from a " +
+      s"$label run at the same scale"
+
+  private def priorNotUnique(label: String): String =
+    s"$label: prior holds several rows for one graph node — priors must " +
+      "be node-unique"
 
   /** DRIVER REPLAY of the rank fixpoint (r13): every update is exact
     * integer arithmetic over the aggregated edge list, so once that
-    * list is materialized and small (the gate above), replaying the
+    * list is materialized and small (the budget above), replaying the
     * rounds in memory is bit-identical to the distributed loop — same
     * long multiply / truncating divide / wrapping sum, same
     * driver-side dshare / BigInt-dtel scalars — while saving 2 pinned
@@ -79,57 +117,47 @@ object Graph {
     * to their corpus at any scale (nodes = hosts, not documents);
     * a graph past the gate takes the distributed rounds unchanged.
     * Equivalence is spec-pinned in GraphSpec (driver ≡ distributed,
-    * weighted/dangling/warm/tol, both operators).
+    * weighted/dangling/warm/tol, both operators, adversarial priors).
     *
     * Returns None — fall through to the distributed loop — when the
-    * prior or seed table exceeds the gate, when an edge endpoint is
+    * prior or seed table exceeds the budget, when an edge endpoint is
     * null (the distributed join silently drops those contributions;
     * replaying that faithfully is not worth the code), or when the
-    * src/dst types differ (driver Any-equality cannot mirror the
-    * union's type coercion).
+    * dst, seed or prior node type differs from the src type (driver
+    * Any-equality cannot mirror a join's or union's type coercion).
     *
-    * `seedsOpt` = Some(distinct seed ids) selects the trustRank update
-    * rule; None the pageRank one. */
-  private def rankReplay(checkpoint: RoundCheckpoint, eAgg: DataFrame,
-                         seedsOpt: Option[DataFrame],
+    * `seeds` = Some(distinct seed ids as `node`) selects the trustRank
+    * update rule; None the pageRank one. */
+  private def rankReplay(eAgg: DataFrame, seeds: Option[DataFrame],
                          prior: Option[DataFrame], iters: Int,
                          dampNum: Long, dampDen: Long, scale: Long,
-                         tol: Option[Long], maxRows: Long,
+                         tol: Option[Long], budget: Long,
                          label: String): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     import scala.collection.mutable
-    import scala.jdk.CollectionConverters._
-    val spark = eAgg.sparkSession
     val nodeType = eAgg.schema("src").dataType
-    if (eAgg.schema("dst").dataType != nodeType) return None
-    if (seedsOpt.exists(_.schema.fields.head.dataType != nodeType))
+    if (eAgg.schema("dst").dataType != nodeType ||
+        (seeds ++ prior).exists(_.schema("node").dataType != nodeType))
       return None
-    def bounded(df: DataFrame): Option[Array[Row]] = {
-      val cap = math.min(maxRows, Int.MaxValue.toLong - 2).toInt
-      val rows = df.limit(cap + 1).collect()
-      if (rows.length > cap) None else Some(rows)
-    }
     // prior/seeds collect under the same driver-memory bound as the
-    // edges (bounded by a limit, not a count — one job each); an
-    // oversized one routes the whole call distributed
-    var priorMap: mutable.HashMap[Any, Long] = null
-    if (prior.isDefined) bounded(prior.get
-        .select(col("node"), col("rank_fp").cast("long"))) match {
-      case None => return None
-      case Some(rows) =>
-        priorMap = mutable.HashMap.empty
-        rows.foreach(r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1))
-            priorMap.update(r.get(0), r.getLong(1)))
-    }
-    var seedSet: mutable.HashSet[Any] = null
-    seedsOpt.foreach(s => bounded(s) match {
-      case None => return None
-      case Some(rows) =>
-        seedSet = mutable.HashSet.empty
-        rows.foreach(r => if (!r.isNullAt(0)) seedSet += r.get(0))
-    })
+    // edges; an oversized one routes the whole call distributed
+    val priorRows = prior.map(p => Rounds.collectWithin(
+      p.select(col("node"), col("rank_fp").cast("long")), budget))
+    val seedRows = seeds.map(Rounds.collectWithin(_, budget))
+    if (priorRows.contains(None) || seedRows.contains(None)) return None
+    // null prior/seed nodes join nothing on the distributed route; a
+    // null prior rank starts cold there (coalesce) — mirror both
+    val priorMap = mutable.HashMap.empty[Any, Long]
+    val priorNodes = mutable.HashSet.empty[Any]
+    val priorDups = mutable.HashSet.empty[Any]
+    priorRows.flatten.foreach(_.foreach(r => if (!r.isNullAt(0)) {
+      if (!priorNodes.add(r.get(0))) priorDups += r.get(0)
+      if (!r.isNullAt(1)) priorMap.update(r.get(0), r.getLong(1))
+    }))
+    val seedSet = mutable.HashSet.empty[Any]
+    seedRows.flatten.foreach(_.foreach(r =>
+      if (!r.isNullAt(0)) seedSet += r.get(0)))
     val eRows = eAgg.select("src", "dst", "w").collect()
     val wtot = mutable.HashMap.empty[Any, Long]
     val nodeSet = mutable.LinkedHashSet.empty[Any]
@@ -142,41 +170,24 @@ object Graph {
       nodeSet += s; nodeSet += r.get(1)
       i += 1
     }
-    val trust = seedSet != null
+    val trust = seeds.isDefined
     val n = nodeSet.size.toLong
-    require(n > 0, s"$label: empty graph")
-    val nSeeds = if (trust) nodeSet.iterator.count(seedSet.contains).toLong else 0L
-    if (trust) require(nSeeds > 0,
-      "trustRank: no seed is a graph node — trust cannot enter")
-    val massBound = if (prior.isDefined) 2 * scale else scale
+    val nSeeds = if (trust) nodeSet.iterator.count(seedSet.contains).toLong else n
     val maxW = if (wtot.isEmpty) 1L else wtot.valuesIterator.max
-    require(maxW <= Long.MaxValue / massBound,
-      s"$label: mass bound $massBound * max out-weight=$maxW would " +
-        "overflow; lower scale or pre-normalize weights")
-    require(dampNum <= Long.MaxValue / (2 * massBound),
-      s"$label: dampNum=$dampNum * 2*mass bound=$massBound overflows")
-    if (trust) require(nSeeds <= scale,
-      s"trustRank: seed count $nSeeds exceeds fixed-point scale $scale")
-    else require(n <= scale,
-      s"pageRank: node count $n exceeds fixed-point scale $scale; " +
-        "raise scale so initR = scale/n stays nonzero")
-    val share = if (trust) scale / nSeeds else scale / n // seedShare|initR
+    val share = rankShare(trust, n, nSeeds, maxW, prior.isDefined, dampNum,
+      scale) // initR | seedShare
     val base = ((dampDen - dampNum) * share) / dampDen
     var rank = mutable.HashMap.empty[Any, Long]
     nodeSet.foreach { nd =>
       val cold = if (!trust || seedSet.contains(nd)) share else 0L
-      val v = if (priorMap == null) cold else priorMap.getOrElse(nd, cold)
-      require(v >= 0 && v <= scale,
-        s"$label: prior rank outside [0, $scale] — priors must come " +
-          s"from a $label run at the same scale")
+      val v = priorMap.getOrElse(nd, cold)
+      require(v >= 0 && v <= scale, priorOutOfRange(label, scale))
       rank.update(nd, v)
     }
-    def danglingSum(m: mutable.HashMap[Any, Long]): Long = {
-      var s = 0L
-      nodeSet.foreach(nd => if (!wtot.contains(nd)) s += m(nd))
-      s
-    }
-    var dangling = danglingSum(rank)
+    // the distributed left join would emit a duplicated node twice
+    require(!priorDups.exists(nodeSet.contains), priorNotUnique(label))
+    var dangling = 0L
+    nodeSet.foreach(nd => if (!wtot.contains(nd)) dangling += rank(nd))
     var it = 0
     var converged = false
     while (it < iters && !converged) {
@@ -211,85 +222,11 @@ object Graph {
       tol.foreach(t => if (l1 <= t) converged = true)
       it += 1
     }
-    checkpoint.releasePinned()
     val schema = StructType(Seq(StructField("node", nodeType),
       StructField("rank_fp", LongType), StructField("rank", DoubleType)))
-    val out = nodeSet.iterator.map(nd =>
-      Row(nd, rank(nd), rank(nd).toDouble / scale.toDouble)).toVector
-    // LocalRelation below ~200k rows (accurate stats → downstream gate
-    // joins auto-broadcast); parallelized above — the CC convention
-    Some(
-      if (out.size <= 200000) spark.createDataFrame(out.asJava, schema)
-      else spark.createDataFrame(
-        spark.sparkContext.parallelize(out, math.max(1, out.size / 100000)),
-        schema))
-  }
-
-  /** Per-round materialization for the iterative operators (pageRank
-    * here, [[Dedup.connectedComponents]]), with the failure-domain knob:
-    *
-    *  - `reliableDir = None` (default): `localCheckpoint` — fastest, but
-    *    the truncated lineage lives in executor storage, so an executor
-    *    loss mid-run FAILS the job. Right for bounded bench runs.
-    *  - `Some(dir)`: reliable checkpoint files under `dir` (an
-    *    HDFS/object-store path at cluster scale) — each round pays a
-    *    second computation plus the file write, and a lost executor
-    *    recomputes from the files instead of killing the run. The knob
-    *    a 50-iteration convergence run on preemptible nodes wants.
-    *    Superseded rounds' checkpoint files are swept by
-    *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    *    (GC-driven) or by deleting `dir` after the run.
-    *
-    * Returns the materialized frame plus the RDD ids the call pinned,
-    * so the caller can unpersist superseded rounds deterministically
-    * (reliable checkpoints pin nothing — the id set is empty and reads
-    * come from the files). */
-  private[operators] final class RoundCheckpoint(
-      sc: org.apache.spark.SparkContext, reliableDir: Option[String]) {
-    reliableDir.foreach(sc.setCheckpointDir)
-    def apply(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val mat = if (reliableDir.isDefined) df.checkpoint(true)
-                else df.localCheckpoint(true)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    /** Mark for checkpoint WITHOUT forcing a materialization job: the
-      * caller's next action on the frame computes it, persists the
-      * blocks, and truncates lineage in that ONE job — the rank loops
-      * ride their per-round control aggregate (dangling mass / L1
-      * step) on exactly that job, halving per-iteration job
-      * submissions. The caller MUST run an action over every partition
-      * (an aggregate does) before relying on the frame being pinned.
-      * Reliable mode stays eager: a lazy reliable checkpoint would
-      * recompute the whole RDD for the file write (RDD.checkpoint's
-      * documented behavior for unpersisted lineage), costing more than
-      * the job it saves. */
-    def lazyMark(df: DataFrame): (DataFrame, Set[Int]) = {
-      if (reliableDir.isDefined) return apply(df)
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val mat = df.localCheckpoint(false)
-      (mat, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    /** The one-shot form for frames that live for the whole run (edge
-      * list, node table): tracked so [[releasePinned]] can free them
-      * when the run's RESULT no longer depends on them — a caller
-      * looping pageRank/CC calls (warm-start maintenance, probes)
-      * otherwise accumulates one cached edge list per call until the
-      * storage pool evicts mid-aggregation (measured: three 100M-edge
-      * pageRank calls OOM'd the 10M probe before this). */
-    private var pinnedIds: Set[Int] = Set.empty
-    def pin(df: DataFrame): DataFrame = {
-      val (mat, ids) = apply(df)
-      pinnedIds ++= ids
-      mat
-    }
-    /** Unpersist every [[pin]]'d frame — call once the returned result
-      * is itself materialized and lineage-free. */
-    def releasePinned(): Unit = {
-      pinnedIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      pinnedIds = Set.empty
-    }
+    Some(Rounds.driverFrame(eAgg.sparkSession, nodeSet.iterator.map(nd =>
+      Row(nd, rank(nd), rank(nd).toDouble / scale.toDouble)).toVector,
+      schema))
   }
 
   /** Weighted in/out degrees per node: (node, out_deg, in_deg,
@@ -338,7 +275,9 @@ object Graph {
     *
     * `checkpointDir` switches the per-round lineage cut from
     * localCheckpoint to reliable checkpoint files — see
-    * [[RoundCheckpoint]] for the failure-domain/cost tradeoff. */
+    * [[graft.core.Rounds]] for the failure-domain/cost tradeoff.
+    * `prior` must hold one row per graph node: several rows for one
+    * node fail on both routes. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, weightCol: Option[String] = None,
                dampNum: Long = 85L, dampDen: Long = 100L,
@@ -347,154 +286,9 @@ object Graph {
                checkpointDir: Option[String] = None,
                tol: Option[Long] = None,
                maxDriverEdges: Long = DefaultMaxDriverRankEdges)
-      : DataFrame = {
-    require(iters >= 0, s"pageRank iters must be >= 0, got $iters")
-    tol.foreach(t => require(t >= 0, s"pageRank tol must be >= 0, got $t"))
-    require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"pageRank damping must satisfy 0 <= dampNum <= dampDen, " +
-        s"got $dampNum/$dampDen")
-    require(scale > 0, s"pageRank scale must be positive, got $scale")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val checkpoint = new RoundCheckpoint(sc, checkpointDir)
-
-    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    // the aggregated edge list is staged ONCE: outW, both sides of the
-    // contrib join, the node table, and the maxW control read all
-    // descend from it, and an unmaterialized `edges` pipeline (e.g.
-    // hostEdges parsing raw HTML) would otherwise re-run its parse per
-    // consumer — measured 4× on the q171 site-graph build (r12)
-    val eAgg = checkpoint.pin(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .filter(assert_true(col("w") >= 0,
-        lit("pageRank: negative edge weight")).isNull)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0))
-    // SMALL-GRAPH ROUTE (r13): the count reads the just-pinned blocks
-    // (a bounded control read); at or under the gate the whole
-    // fixpoint replays on the driver, bit-identically — see
-    // [[rankReplay]]. Strict gate guard: 0 forces distributed as
-    // documented, including for an empty edge list.
-    if (maxDriverEdges > 0 && eAgg.count() <= maxDriverEdges) {
-      rankReplay(checkpoint, eAgg, None, prior, iters, dampNum, dampDen,
-        scale, tol, maxDriverEdges, "pageRank")
-        .foreach(df => return df)
-    }
-    val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
-    // the big, per-iteration-reused side: fixed src layout, lineage cut
-    val contribE = checkpoint.pin(eAgg.join(outW, "src")
-      .repartition(col("src")))
-    val nodes = contribE.select(col("src").as("node"))
-      .union(contribE.select(col("dst").as("node"))).distinct()
-    val nodesF = checkpoint.pin(nodes
-      .join(outW.select(col("src").as("node"), lit(true).as("__o")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("__o"), lit(false)).as("has_out")))
-
-    val n = nodesF.count() // bounded control read: node count
-    require(n > 0, "pageRank: empty graph")
-    // overflow guard: cold start keeps mass ≤ scale (it only shrinks);
-    // a warm start may begin at ≤ 2·scale (see the prior contract), so
-    // its bounds tighten ×2 — fail fast instead of silently wrapping
-    // (the zorderValue lesson). Largest products: rank_fp*w ≤
-    // massBound*maxWtot and dampNum*(inSum+dshare) ≤ dampNum*2*massBound.
-    val massBound = if (prior.isDefined) 2 * scale else scale
-    val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
-      .first().getLong(0) // bounded control read: max out-weight
-    require(maxW <= Long.MaxValue / massBound,
-      s"pageRank: mass bound $massBound * max out-weight=$maxW would " +
-        "overflow; lower scale or pre-normalize weights")
-    require(dampNum <= Long.MaxValue / (2 * massBound),
-      s"pageRank: dampNum=$dampNum * 2*mass bound=$massBound overflows")
-    // n > scale ⇒ initR = 0 and every rank silently collapses to zero;
-    // fail fast like the other fixed-point guards (raise scale instead)
-    require(n <= scale,
-      s"pageRank: node count $n exceeds fixed-point scale $scale; " +
-        "raise scale so initR = scale/n stays nonzero")
-    val initR = scale / n
-    val base = ((dampDen - dampNum) * initR) / dampDen
-
-    val init = prior match {
-      case None => nodesF.withColumn("rank_fp", lit(initR))
-      case Some(p) =>
-        // nodes the prior misses start uniform; out-of-range prior
-        // ranks fail row-locally (no extra job — the assert rides the
-        // init materialization the loop pays anyway)
-        nodesF.join(
-            p.select(col("node"), col("rank_fp").cast("long").as("__pr")),
-            Seq("node"), "left")
-          .select(col("node"), col("has_out"),
-            coalesce(col("__pr"), lit(initR)).as("rank_fp"))
-          .filter(assert_true(
-            col("rank_fp") >= 0 && col("rank_fp") <= scale,
-            lit(s"pageRank: prior rank outside [0, $scale] — priors " +
-              "must come from a pageRank run at the same scale")).isNull)
-    }
-    // the dangling-mass control read RIDES each round's materialization
-    // job (lazyMark + the aggregate below is the round's ONE action in
-    // local-checkpoint mode; reliable mode pays the eager checkpoint's
-    // extra job by design) — round k's update consumes the mass
-    // computed when round k−1's output materialized, the identical
-    // value the old separate per-round aggregate read. In tol mode the
-    // L1 step rides the SAME aggregate, so tolerance-chased runs also
-    // submit one job per round instead of three.
-    def danglingOf(c: Column): Column =
-      coalesce(sum(when(!col("has_out"), c)), lit(0L))
-    var (ranks, prevIds) = checkpoint.lazyMark(init)
-    // bounded control read: materializes init and returns its dangling
-    // mass in one job
-    var dangling = ranks.agg(danglingOf(col("rank_fp"))).first().getLong(0)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val dshare = dangling / n
-      val inSum = ranks.select(col("node").as("src"), col("rank_fp"))
-        .join(contribE, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(idiv(col("rank_fp") * col("w"), col("wtot"))).as("__in"))
-      val next = nodesF.join(inSum, Seq("node"), "left")
-        .select(col("node"), col("has_out"),
-          (lit(base) + idiv(
-            lit(dampNum) * (coalesce(col("__in"), lit(0L)) + lit(dshare)),
-            lit(dampDen))).as("rank_fp"))
-      val (mat, ids) = checkpoint.lazyMark(next)
-      // tolerance mode: stop once the L1 step shrinks to `tol` ulps —
-      // `iters` is then the CAP, not the count. The RESULT is still
-      // exactly pageRank(edges, k) for the k where the rule fired —
-      // every iteration stays exact integer arithmetic — but k is
-      // data-dependent, so callers pinning bit-reproducible replay
-      // (the q154 oracle) use the fixed-iteration form and convergence
-      // chasers (warm-start maintenance on preemptible nodes, with
-      // `checkpointDir`) use this one.
-      val row = tol match {
-        case None => mat.agg(danglingOf(col("rank_fp"))).first()
-        case Some(_) =>
-          // both rank tables carry the full node universe, so the inner
-          // join preserves every row and the dangling sum over it
-          // equals the sum over `mat` alone
-          mat.select(col("node"), col("has_out"),
-              col("rank_fp").as("__n"))
-            .join(ranks.select(col("node"), col("rank_fp").as("__o")),
-              "node")
-            .agg(danglingOf(col("__n")),
-              coalesce(sum(abs(col("__n") - col("__o"))), lit(0L)))
-            .first()
-      }
-      dangling = row.getLong(0)
-      tol.foreach(t => if (row.getLong(1) <= t) converged = true)
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      ranks = mat
-      prevIds = ids
-      it += 1
-    }
-    // the final ranks are checkpointed (lineage-free) — the run-scoped
-    // edge/node pins can go now, so looped callers (warm-start
-    // maintenance) don't accumulate a cached edge list per call
-    checkpoint.releasePinned()
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
-  }
+      : DataFrame =
+    rank(edges, srcCol, dstCol, iters, weightCol, dampNum, dampDen, scale,
+      prior, checkpointDir, tol, maxDriverEdges, seeds = None)
 
   /** Build the HOST-level link graph from crawled pages — the missing
     * first step of the crawl-curation composition (WARC →
@@ -596,7 +390,8 @@ object Graph {
     * present in the graph are ignored (they can neither hold nor pass
     * trust); `seeds` must carry unique node ids in `seedCol`.
     *
-    * `tol`/`checkpointDir` behave exactly as on [[pageRank]]. Returns
+    * `tol`/`checkpointDir`/`prior` behave exactly as on [[pageRank]]
+    * (one distributed loop and one driver replay serve both). Returns
     * (node, rank_fp, rank) for every graph node — non-seed nodes
     * unreachable from any seed converge to 0, which IS the signal. */
   def trustRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -608,140 +403,168 @@ object Graph {
                 tol: Option[Long] = None,
                 prior: Option[DataFrame] = None,
                 maxDriverEdges: Long = DefaultMaxDriverRankEdges)
-      : DataFrame = {
-    require(iters >= 0, s"trustRank iters must be >= 0, got $iters")
-    tol.foreach(t => require(t >= 0, s"trustRank tol must be >= 0, got $t"))
+      : DataFrame =
+    rank(edges, srcCol, dstCol, iters, weightCol, dampNum, dampDen, scale,
+      prior, checkpointDir, tol, maxDriverEdges,
+      seeds = Some(seeds.select(col(seedCol).as("node")).distinct()))
+
+  /** The one rank fixpoint behind [[pageRank]] (`seeds = None`) and
+    * [[trustRank]] (`seeds` = the distinct seed ids as `node`): stage
+    * the aggregated edge list once, replay on the driver under the
+    * budget, otherwise run the distributed rounds. Both operators keep
+    * their own scalars (dshare = dangling div N; dtel through BigInt)
+    * and error labels. */
+  private def rank(edges: DataFrame, srcCol: String, dstCol: String,
+                   iters: Int, weightCol: Option[String], dampNum: Long,
+                   dampDen: Long, scale: Long, prior: Option[DataFrame],
+                   checkpointDir: Option[String], tol: Option[Long],
+                   maxDriverEdges: Long,
+                   seeds: Option[DataFrame]): DataFrame = {
+    val trust = seeds.isDefined
+    val label = if (trust) "trustRank" else "pageRank"
+    require(iters >= 0, s"$label iters must be >= 0, got $iters")
+    tol.foreach(t => require(t >= 0, s"$label tol must be >= 0, got $t"))
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
-      s"trustRank damping must satisfy 0 <= dampNum <= dampDen, " +
+      s"$label damping must satisfy 0 <= dampNum <= dampDen, " +
         s"got $dampNum/$dampDen")
-    require(scale > 0, s"trustRank scale must be positive, got $scale")
-    val spark = edges.sparkSession
-    val sc = spark.sparkContext
-    val checkpoint = new RoundCheckpoint(sc, checkpointDir)
+    require(scale > 0, s"$label scale must be positive, got $scale")
+    val rounds = new Rounds(edges.sparkSession.sparkContext, checkpointDir)
+    // the run-scoped edge/node pins go once the result no longer needs
+    // them (the final ranks are checkpointed or driver-local), so looped
+    // callers (warm-start maintenance) don't accumulate a cached edge
+    // list per call
+    try {
+      val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
+      // the aggregated edge list is staged ONCE: outW, both sides of the
+      // contrib join, the node table, and the maxW control read all
+      // descend from it, and an unmaterialized `edges` pipeline (e.g.
+      // hostEdges parsing raw HTML) would otherwise re-run its parse per
+      // consumer — measured 4× on the q171 site-graph build (r12)
+      val eAgg = rounds.pin(edges
+        .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
+        .filter(assert_true(col("w") >= 0,
+          lit(s"$label: negative edge weight")).isNull)
+        .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+        .filter(col("w") > 0))
+      // SMALL-GRAPH ROUTE (r13): the count reads the just-pinned blocks
+      // (a bounded control read); at or under the budget the whole
+      // fixpoint replays on the driver, bit-identically
+      if (Rounds.onDriver(maxDriverEdges, eAgg.count()))
+        rankReplay(eAgg, seeds, prior, iters, dampNum, dampDen, scale, tol,
+          maxDriverEdges, label) match {
+          case Some(df) => return df
+          case None => ()
+        }
+      val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
+      // the big, per-iteration-reused side: fixed src layout, lineage cut
+      val contribE = rounds.pin(eAgg.join(outW, "src")
+        .repartition(col("src")))
+      val flagged = contribE.select(col("src").as("node"))
+        .union(contribE.select(col("dst").as("node"))).distinct()
+        .join(outW.select(col("src").as("node"), lit(true).as("__o")),
+          Seq("node"), "left")
+      val hasOut = coalesce(col("__o"), lit(false)).as("has_out")
+      val nodesF = rounds.pin(seeds match {
+        case None => flagged.select(col("node"), hasOut)
+        case Some(s) => flagged
+          .join(s.withColumn("__s", lit(true)), Seq("node"), "left")
+          .select(col("node"), hasOut,
+            coalesce(col("__s"), lit(false)).as("is_seed"))
+      })
+      // trustRank's teleport terms reach seeds only
+      def seeded(v: Column): Column =
+        if (trust) when(col("is_seed"), v).otherwise(lit(0L)) else v
 
-    val w = weightCol.map(col(_).cast("long")).getOrElse(lit(1L))
-    // staged once — the pageRank edge-staging rationale verbatim
-    val eAgg = checkpoint.pin(edges
-      .select(col(srcCol).as("src"), col(dstCol).as("dst"), w.as("w"))
-      .filter(assert_true(col("w") >= 0,
-        lit("trustRank: negative edge weight")).isNull)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0))
-    // SMALL-GRAPH ROUTE (r13) — the pageRank gate verbatim, with the
-    // distinct seed set collected under the same driver-memory bound
-    if (maxDriverEdges > 0 && eAgg.count() <= maxDriverEdges) {
-      rankReplay(checkpoint, eAgg,
-        Some(seeds.select(col(seedCol)).distinct()), prior, iters,
-        dampNum, dampDen, scale, tol, maxDriverEdges, "trustRank")
-        .foreach(df => return df)
-    }
-    val outW = eAgg.groupBy("src").agg(sum(col("w")).as("wtot"))
-    val contribE = checkpoint.pin(eAgg.join(outW, "src")
-      .repartition(col("src")))
-    val nodes = contribE.select(col("src").as("node"))
-      .union(contribE.select(col("dst").as("node"))).distinct()
-    val nodesF = checkpoint.pin(nodes
-      .join(outW.select(col("src").as("node"), lit(true).as("__o")),
-        Seq("node"), "left")
-      .join(seeds.select(col(seedCol).as("node"), lit(true).as("__s"))
-        .distinct(), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__o"), lit(false)).as("has_out"),
-        coalesce(col("__s"), lit(false)).as("is_seed")))
+      // bounded control reads: node count + seed∩graph count in one
+      // pass, then the max out-weight
+      val cr = nodesF.agg(count(lit(1)),
+        coalesce(sum(seeded(lit(1L))), lit(0L))).head()
+      val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
+        .first().getLong(0)
+      val n = cr.getLong(0)
+      val share = rankShare(trust, n, cr.getLong(1), maxW, prior.isDefined,
+        dampNum, scale) // initR | seedShare
+      val base = ((dampDen - dampNum) * share) / dampDen
 
-    // bounded control reads: node count + seed∩graph count in one pass
-    val cr = nodesF.agg(count(lit(1)),
-      sum(when(col("is_seed"), 1L).otherwise(0L))).head()
-    val (n, nSeeds) = (cr.getLong(0), cr.getLong(1))
-    require(n > 0, "trustRank: empty graph")
-    require(nSeeds > 0,
-      "trustRank: no seed is a graph node — trust cannot enter")
-    // overflow guards mirror pageRank's: cold trust mass stays ≤ scale
-    // (it only shrinks), but a warm start on a GROWN graph can carry
-    // transient mass up to ~2·scale (prior mass ≤ scale plus new-seed
-    // seedShare mass ≤ scale) — the bound tightens ×2 when a prior is
-    // set so the guard fails fast instead of silently wrapping
-    val massBound = if (prior.isDefined) 2 * scale else scale
-    val maxW = outW.agg(coalesce(max(col("wtot")), lit(1L)))
-      .first().getLong(0) // bounded control read: max out-weight
-    require(maxW <= Long.MaxValue / massBound,
-      s"trustRank: mass bound $massBound * max out-weight=$maxW would " +
-        "overflow; lower scale or pre-normalize weights")
-    require(dampNum <= Long.MaxValue / (2 * massBound),
-      s"trustRank: dampNum=$dampNum * 2*mass bound=$massBound overflows")
-    require(nSeeds <= scale,
-      s"trustRank: seed count $nSeeds exceeds fixed-point scale $scale")
-    val seedShare = scale / nSeeds
-    val base = ((dampDen - dampNum) * seedShare) / dampDen
-
-    // warm start — the [[pageRank]] prior contract verbatim: exact
-    // continuation on an unchanged graph (k cold + j warm ≡ k+j cold,
-    // spec-pinned); nodes the prior misses start at THEIR cold init
-    // (seedShare for seeds, 0 otherwise); out-of-range priors fail
-    // row-locally. On a grown graph the init mass can transiently reach
-    // ~2·scale (prior ≤ scale plus new-seed seedShare mass ≤ scale) —
-    // covered by the ×2 massBound tightening above.
-    val init = prior match {
-      case None => nodesF.withColumn("rank_fp",
-        when(col("is_seed"), lit(seedShare)).otherwise(lit(0L)))
-      case Some(p) =>
-        nodesF.join(
-            p.select(col("node"), col("rank_fp").cast("long").as("__pr")),
-            Seq("node"), "left")
-          .select(col("node"), col("has_out"), col("is_seed"),
-            coalesce(col("__pr"),
-              when(col("is_seed"), lit(seedShare)).otherwise(lit(0L)))
-              .as("rank_fp"))
-          .filter(assert_true(
-            col("rank_fp") >= 0 && col("rank_fp") <= scale,
-            lit(s"trustRank: prior rank outside [0, $scale] — priors " +
-              "must come from a trustRank run at the same scale")).isNull)
-    }
-    // the dangling control read rides each round's materialization job
-    // — the pageRank fold verbatim; the dangling·seedShare product
-    // stays a DRIVER-side BigInt scalar (it can exceed Long for large
-    // scales), never an executor expression
-    def danglingOf(c: Column): Column =
-      coalesce(sum(when(!col("has_out"), c)), lit(0L))
-    var (ranks, prevIds) = checkpoint.lazyMark(init)
-    var dangling = ranks.agg(danglingOf(col("rank_fp"))).first().getLong(0)
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val dtel = ((BigInt(dangling) * seedShare) / scale).toLong
-      val inSum = ranks.select(col("node").as("src"), col("rank_fp"))
-        .join(contribE, "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(idiv(col("rank_fp") * col("w"), col("wtot"))).as("__in"))
-      val next = nodesF.join(inSum, Seq("node"), "left")
-        .select(col("node"), col("has_out"), col("is_seed"),
-          (when(col("is_seed"), lit(base)).otherwise(lit(0L)) + idiv(
-            lit(dampNum) * (coalesce(col("__in"), lit(0L)) +
-              when(col("is_seed"), lit(dtel)).otherwise(lit(0L))),
-            lit(dampDen))).as("rank_fp"))
-      val (mat, ids) = checkpoint.lazyMark(next)
-      val row = tol match {
-        case None => mat.agg(danglingOf(col("rank_fp"))).first()
-        case Some(_) =>
-          mat.select(col("node"), col("has_out"),
-              col("rank_fp").as("__n"))
-            .join(ranks.select(col("node"), col("rank_fp").as("__o")),
-              "node")
-            .agg(danglingOf(col("__n")),
-              coalesce(sum(abs(col("__n") - col("__o"))), lit(0L)))
-            .first()
+      // warm start: nodes the prior misses start at THEIR cold init;
+      // out-of-range prior ranks fail row-locally (no extra job — the
+      // assert rides the init materialization the loop pays anyway)
+      val init = prior match {
+        case None => nodesF.withColumn("rank_fp", seeded(lit(share)))
+        case Some(p) =>
+          nodesF.join(
+              p.select(col("node"), col("rank_fp").cast("long").as("__pr")),
+              Seq("node"), "left")
+            .select(col("node"), col("has_out"),
+              coalesce(col("__pr"), seeded(lit(share))).as("rank_fp"))
+            .filter(assert_true(
+              col("rank_fp") >= 0 && col("rank_fp") <= scale,
+              lit(priorOutOfRange(label, scale))).isNull)
       }
-      dangling = row.getLong(0)
-      tol.foreach(t => if (row.getLong(1) <= t) converged = true)
-      prevIds.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      ranks = mat
-      prevIds = ids
-      it += 1
-    }
-    checkpoint.releasePinned()
-    ranks.select(col("node"), col("rank_fp"),
-      (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
+      // the dangling-mass control read RIDES each round's
+      // materialization job (lazyMark + the aggregate below is the
+      // round's ONE action in local-checkpoint mode; reliable mode pays
+      // the eager checkpoint's extra job by design) — round k's update
+      // consumes the mass computed when round k−1's output
+      // materialized. In tol mode the L1 step rides the SAME aggregate,
+      // so tolerance-chased runs also submit one job per round.
+      def danglingOf(c: Column): Column =
+        coalesce(sum(when(!col("has_out"), c)), lit(0L))
+      var ranks = rounds.lazyMark(init)
+      // bounded control read: materializes init and returns its dangling
+      // mass in one job; its row count exposes a prior with several rows
+      // for one node (the left join duplicates that node)
+      val r0 = ranks.agg(danglingOf(col("rank_fp")), count(lit(1))).first()
+      require(r0.getLong(1) == n, priorNotUnique(label))
+      var dangling = r0.getLong(0)
+      var it = 0
+      var converged = false
+      while (it < iters && !converged) {
+        val extra = // pageRank's dshare | trustRank's dtel
+          if (trust) ((BigInt(dangling) * share) / scale).toLong
+          else dangling / n
+        val inSum = ranks.select(col("node").as("src"), col("rank_fp"))
+          .join(contribE, "src")
+          .groupBy(col("dst").as("node"))
+          .agg(sum(idiv(col("rank_fp") * col("w"), col("wtot"))).as("__in"))
+        val next = nodesF.join(inSum, Seq("node"), "left")
+          .select(col("node"), col("has_out"),
+            (seeded(lit(base)) + idiv(
+              lit(dampNum) * (coalesce(col("__in"), lit(0L)) +
+                seeded(lit(extra))),
+              lit(dampDen))).as("rank_fp"))
+        val mat = rounds.lazyMark(next)
+        // tolerance mode: stop once the L1 step shrinks to `tol` ulps —
+        // `iters` is then the CAP, not the count. The RESULT is still
+        // exactly the k-iteration run for the k where the rule fired —
+        // every iteration stays exact integer arithmetic — but k is
+        // data-dependent, so callers pinning bit-reproducible replay
+        // (the q154 oracle) use the fixed-iteration form and convergence
+        // chasers (warm-start maintenance on preemptible nodes, with
+        // `checkpointDir`) use this one.
+        val row = tol match {
+          case None => mat.agg(danglingOf(col("rank_fp"))).first()
+          case Some(_) =>
+            // both rank tables carry the full node universe, so the inner
+            // join preserves every row and the dangling sum over it
+            // equals the sum over `mat` alone
+            mat.select(col("node"), col("has_out"),
+                col("rank_fp").as("__n"))
+              .join(ranks.select(col("node"), col("rank_fp").as("__o")),
+                "node")
+              .agg(danglingOf(col("__n")),
+                coalesce(sum(abs(col("__n") - col("__o"))), lit(0L)))
+              .first()
+        }
+        dangling = row.getLong(0)
+        tol.foreach(t => if (row.getLong(1) <= t) converged = true)
+        Rounds.release(ranks)
+        ranks = mat
+        it += 1
+      }
+      ranks.select(col("node"), col("rank_fp"),
+        (col("rank_fp").cast("double") / lit(scale.toDouble)).as("rank"))
+    } finally rounds.releasePinned()
   }
 
   /** Authority gate: keep rows of `docs` whose `keyCol` node holds a

@@ -254,28 +254,26 @@ final class EdgeStore(wh: graft.sources.Warehouse, name: String,
     * FileNotFoundException on its next action once a later maintenance
     * commits. Callers holding ranks across epochs must materialize
     * them first — collect / localCheckpoint / write), then serve the result
-    * FROM the committed files and unpersist every checkpoint pin the
-    * computation left behind — the rank operators return their final
-    * round's localCheckpoint pinned, and a per-epoch maintenance loop
-    * would otherwise accumulate one cached rank table per call (the
-    * looped-pin OOM class `RoundCheckpoint.releasePinned` exists for).
+    * FROM the committed files and unpersist the returned ranks' own
+    * pin — the rank operators release every other pin themselves but
+    * return their final round's localCheckpoint pinned, and a
+    * per-epoch maintenance loop would otherwise accumulate one cached
+    * rank table per call (the looped-pin OOM class
+    * `Rounds.releasePinned` exists for). Only that pin: a concurrent
+    * `Par` leg's checkpoints are not this commit's to free.
     * The served frame is bit-identical: rank_fp round-trips parquet
     * exactly and `rank` is a pure scalar function of it. */
   private def maintainCommit(spark: SparkSession, state: String,
       scale: Long, kvs: Seq[(String, String)] = Nil)(
       compute: Option[DataFrame] => DataFrame): DataFrame = {
     val prior = storedState(spark, state)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
     val ranks = compute(prior)
-    graft.sources.StoreTxn.transact(spark, wh.root) {
+    try graft.sources.StoreTxn.transact(spark, wh.root) {
       val txn = graft.sources.StoreTxn.current(wh.root)
       ranks.select("node", "rank_fp")
         .write.parquet(txn.stateVersionDir(state))
       kvs.foreach { case (k, v) => txn.putKv(k, v) }
-    }
-    (sc.getPersistentRDDs.keySet.toSet -- before).foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+    } finally graft.core.Rounds.release(ranks)
     val committed = spark.read.parquet(
       graft.sources.StoreTxn.stateDir(wh.root, state).get)
     committed.select(col("node"), col("rank_fp"),

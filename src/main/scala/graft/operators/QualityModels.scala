@@ -304,9 +304,9 @@ object QualityModels {
     // materialize the (label, features) projection ONCE — the loop
     // below scans it `iters` times, and an unmaterialized plan would
     // re-run tokenize+features per iteration; blocks released below
-    // (the connectedComponents checkpoint-tracking idiom)
-    val (feats, ckptIds) = trackedCheckpoint(
-      train.select((labelCol +: featCols).map(col): _*))
+    // (an owned pin, see graft.core.Rounds)
+    val rounds = new graft.core.Rounds(train.sparkSession.sparkContext)
+    val feats = rounds.pin(train.select((labelCol +: featCols).map(col): _*))
     try {
       var w = Array.fill(featCols.size)(0L)
       var n = -1L
@@ -342,7 +342,7 @@ object QualityModels {
         }
       }
       w
-    } finally release(train.sparkSession, ckptIds)
+    } finally rounds.releasePinned()
   }
 
   /** [[trainPerceptron]] with per-feature POWER-OF-TWO up-scaling — the
@@ -411,22 +411,6 @@ object QualityModels {
     w.zip(shifts).map { case (wj, s) => wj << s }.toArray
   }
 
-  /** localCheckpoint with its new RDD ids tracked, so training can
-    * unpersist its blocks deterministically instead of leaking one
-    * materialized stream per call until ContextCleaner GC (see
-    * [[Dedup.connectedComponents]], where the idiom comes from). */
-  private def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val mat = df.localCheckpoint(true)
-    (mat, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private def release(spark: org.apache.spark.sql.SparkSession,
-                      ids: Set[Int]): Unit =
-    ids.foreach(i => spark.sparkContext.getPersistentRDDs.get(i)
-      .foreach(_.unpersist(false)))
-
   /** The trained decision value w·x as a row-local integer Column over
     * a [[classifierFeatures]] frame — weights folded in as literals, so
     * full-corpus scoring is one codegen'd projection with NO exchange
@@ -439,6 +423,12 @@ object QualityModels {
     featCols.zip(weights).map { case (c, wi) => col(c) * lit(wi) }
       .reduce(_ + _)
   }
+
+  /** [[trainHashedPerceptron]]'s small-trainset budget: max feature-
+    * occurrence rows replayed on the driver (~24 MB collected; the
+    * [[graft.core.Rounds.onDriver]] gate). 0 forces distributed
+    * iterations. */
+  private[graft] final val MaxDriverOcc = 1L << 20
 
   /** Batch perceptron over HASHED word uni+bigram features — the
     * fastText bag-of-ngrams classifier proper ([[trainPerceptron]]'s
@@ -464,13 +454,6 @@ object QualityModels {
     * `iters` passes over the SAMPLE only) — then score any corpus
     * with [[hashedMargin]], a single identical pass. Returns the
     * dense weight array indexed by feature bucket. */
-  /** [[trainHashedPerceptron]]'s small-trainset gate: max feature-
-    * occurrence rows replayed on the driver (a driver-memory bound, the
-    * [[Dedup.connectedComponents]] discipline). Env
-    * `SPARK_GRAFT_TRAIN_DRIVER_MAX`; 0 forces distributed iterations. */
-  private[graft] val MaxDriverOcc: Long =
-    graft.core.Env.long("SPARK_GRAFT_TRAIN_DRIVER_MAX", 1L << 20)
-
   def trainHashedPerceptron(train: DataFrame, idCol: String,
                             textCol: String, labelCol: String,
                             numFeatures: Int = 4096, iters: Int = 4,
@@ -486,7 +469,8 @@ object QualityModels {
     // update) — materialize once rather than re-running tokenize+explode
     // 2·iters times (the preFilter staging rule); blocks released in the
     // finally below (one leaked stream per training call otherwise)
-    val (fs, ckptIds) = trackedCheckpoint(
+    val rounds = new graft.core.Rounds(train.sparkSession.sparkContext)
+    val fs = rounds.pin(
       featStream(train, idCol, textCol, numFeatures).join(labels, Seq("id")))
     try {
     // occurrence total bounds every intermediate: |w_f| ≤ iters·occ and
@@ -500,14 +484,14 @@ object QualityModels {
     val w = Array.fill(numFeatures)(0L)
     // SMALL-TRAINSET ROUTE (r12): each distributed iteration costs a
     // broadcast-join margin pass plus an update collect over the staged
-    // occurrence stream. When the stream is at most `MaxDriverOcc` rows
+    // occurrence stream. When the stream is at most `maxDriverOcc` rows
     // (the count above reads the staged blocks; ~24 MB collected at the
     // default), collect (id, f, y) once and replay the identical
     // iterations in memory — same margin sums, same y·m ≤ 0 update
     // filter, same all-zero-update early stop. Exact integer arithmetic
     // is order-independent, so the weights are bit-identical
     // (spec-pinned in QualityModelsSpec).
-    if (maxDriverOcc > 0 && occ <= maxDriverOcc) {
+    if (graft.core.Rounds.onDriver(maxDriverOcc, occ)) {
       val rows = fs.select(col("id"), col("__f"), col("__y")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       var it = 0
@@ -556,7 +540,7 @@ object QualityModels {
       }
     }
     w
-    } finally release(train.sparkSession, ckptIds)
+    } finally rounds.releasePinned()
   }
 
   /** Calibrate a decision threshold for ANY scorer (trained margins,

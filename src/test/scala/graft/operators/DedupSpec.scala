@@ -267,6 +267,15 @@ class DedupSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(driver === dist, s"graph $i")
     }
+    // a null endpoint routes distributed (union-find has no null node):
+    // both routes label the null id and keep its non-null partner
+    val withNull = Seq((Some(1L), Some(2L)), (Some(5L), None))
+      .toDF("id_a", "id_b")
+    def labels(maxDriverEdges: Long) = Dedup.connectedComponents(withNull,
+        "id_a", "id_b", maxDriverEdges = maxDriverEdges)
+      .collect().map(r => (r.get(0), r.get(1))).toSet
+    assert(labels(Dedup.DefaultMaxDriverEdges) === labels(0L))
+    assert(labels(0L) === Set((1L, 1L), (2L, 1L), (5L, 5L), (null, null)))
   }
 
   test("duplicateSpans: hand-checked interior shared passage, both docs") {

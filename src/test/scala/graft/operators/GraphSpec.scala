@@ -567,5 +567,31 @@ class GraphSpec extends SparkSpec {
       Graph.pageRank(edges, "src", "dst", 1, Some("w"),
         prior = Some(Seq((1L, -5L)).toDF("node", "rank_fp"))).collect()
     }
+    // a prior keyed by another type than the edges (string nodes over
+    // long edges) routes distributed: the join coerces and honors every
+    // prior rank, where a replay keyed by boxed values would miss them
+    // all and cold-start
+    val strPrior = prior.select(col("node").cast("string").as("node"),
+      col("rank_fp"))
+    val warm = ranks(Graph.pageRank(edges, "src", "dst", 2, Some("w"),
+      prior = Some(prior)))
+    assert(ranks(Graph.pageRank(edges, "src", "dst", 2, Some("w"),
+      prior = Some(strPrior))) === warm)
+    assert(ranks(Graph.pageRank(edges, "src", "dst", 2, Some("w"),
+      prior = Some(strPrior), maxDriverEdges = 0)) === warm)
+    // several prior rows for one graph node fail alike on both routes
+    def failure(run: => Any): String =
+      intercept[IllegalArgumentException](run).getMessage
+    for ((p, trust) <- Seq((prior, false), (tprior, true))) {
+      val dup = p.union(p.filter(col("node") === 3L))
+      def run(maxDriverEdges: Long) =
+        if (trust) Graph.trustRank(edges, "src", "dst", 1, seeds, "node",
+          Some("w"), prior = Some(dup), maxDriverEdges = maxDriverEdges)
+        else Graph.pageRank(edges, "src", "dst", 1, Some("w"),
+          prior = Some(dup), maxDriverEdges = maxDriverEdges)
+      val onDriver = failure(run(Graph.DefaultMaxDriverRankEdges).collect())
+      assert(onDriver.contains("node-unique"), onDriver)
+      assert(failure(run(0L).collect()) === onDriver)
+    }
   }
 }
